@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from datetime import datetime
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,6 +38,7 @@ from osarchiver_spark.operators.retention import (
 )
 from osarchiver_spark.plans.jobspec import ArchiveJobSpec, TableSpec
 from osarchiver_spark.plans.toposort import table_generations
+from osarchiver_spark.session import overlap
 from osarchiver_spark.sinks.base import Sink
 
 
@@ -86,19 +88,20 @@ class Archiver:
             sink.begin_run(now)  # dated per-run namespace for file sinks
         results: list[TableRunResult] = []
         for gen in table_generations(self.spec.eligible_tables()):
-            if self.max_parallel_tables > 1 and len(gen) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as ex:
-                    results.extend(
-                        ex.map(
-                            lambda t: self._run_table(t, dataframes[t.name], cutoff), gen
-                        )
-                    )
-            else:
-                for tspec in gen:
-                    results.append(self._run_table(tspec, dataframes[tspec.name], cutoff))
+            # at most max_parallel_tables lanes, each running its share
+            # of the generation in order; lane 0 is the calling thread
+            width = max(1, min(self.max_parallel_tables, len(gen)))
+            lanes = overlap(
+                dataframes[gen[0].name].sparkSession,
+                *(partial(self._run_lane, gen[i::width], dataframes, cutoff) for i in range(width)),
+            )
+            results.extend(lanes[i % width][i // width] for i in range(len(gen)))
         return results
+
+    def _run_lane(
+        self, tables: list[TableSpec], dataframes: dict[str, DataFrame], cutoff: datetime
+    ) -> list[TableRunResult]:
+        return [self._run_table(t, dataframes[t.name], cutoff) for t in tables]
 
     def _run_table(self, tspec: TableSpec, df: DataFrame, cutoff: datetime) -> TableRunResult:
         assert tspec.deleted_column is not None

@@ -109,8 +109,12 @@ def minhash_lsh_pairs(
     rows = num_hashes // bands
     # shingled feeds three consumers (signature + both sides of the
     # verify join): cache the shingle arrays instead of recomputing
-    # the tokenize+hash pipeline per consumer.
-    shingled = transient(_with_shingles(df, id_col, text_col, shingle_n))
+    # the tokenize+hash pipeline per consumer. Eager: AQE starts the
+    # consumers' broadcast jobs concurrently, and on a lazy checkpoint
+    # the later ones still carry the shingling plan's SQL metrics,
+    # which the first job's lineage truncation frees — their task
+    # updates then log "non-existent accumulator" ERRORs.
+    shingled = transient(_with_shingles(df, id_col, text_col, shingle_n), eager=True)
     sig = shingled.select(
         "doc_id",
         "shingles",

@@ -102,8 +102,8 @@ def export_training_set_indexed(
     corpus arrives as ``n_batches`` doc_id-ordered drops; each drop is
     a PROBE of the persisted LSH band index (never a corpus re-sketch)
     followed by an APPEND of the drop's bands — the maintenance loop
-    tools/rehearse_sf10_index_chain.py rehearses, here wired through
-    to the full gate → dedup → split → export chain.
+    the sf10 index-chain rehearsal measured (BENCH_SF10_INDEX_CHAIN.json),
+    here wired through to the full gate → dedup → split → export chain.
 
     Row-identical to :func:`export_training_set` BY CONSTRUCTION, not
     by luck: with id-ordered batches, {intra-batch pairs} ∪
@@ -409,7 +409,6 @@ def export_vector_store_indexed(
     nprobe: int = 4,
     max_batch_rows: int | None = None,
     pq_models: tuple[list[list[float]], list[list[list[float]]]] | None = None,
-    on_stage=None,
 ) -> DataFrame:
     """The INCREMENTAL-INDEX build of the same vector store: the
     corpus arrives as ``n_batches`` vec_id-ordered drops. Each drop
@@ -441,10 +440,6 @@ def export_vector_store_indexed(
     (``batch_rows``), so the drop's batch contract is checked once,
     not once per probe.
 
-    ``on_stage(label, seconds)``, when given, receives per-drop
-    probe/append wall timings (rehearsal instrumentation; no effect
-    on the artifacts).
-
     Crash safety: each drop brackets its two appends with the
     streaming loop's BEGIN/DONE markers (``<store>__epochs/``, BEGIN
     carrying a manifest snapshot of both directories). A re-run after
@@ -455,23 +450,18 @@ def export_vector_store_indexed(
     tests/test_crash_recovery.py). Consequence: out/index dirs are
     single-use — a deliberate rebuild needs fresh (or cleared)
     directories, matching the streaming maintainers' contract."""
-    import time as _time
-
     from osarchiver_spark.operators.ivf import (
         INDEXED_PROBE_MAX_QUERIES,
         ivf_index,
         ivf_neardup_probe,
     )
+    from osarchiver_spark.session import overlap
     from osarchiver_spark.sources.parquet import load_table
     from osarchiver_spark.streaming.vector_store import (
         _begin_epoch,
         _epoch_guard,
         _mark_epoch,
     )
-
-    def _stage(label, t0):
-        if on_stage is not None:
-            on_stage(label, round(_time.perf_counter() - t0, 3))
 
     if n_batches < 1:
         raise ValueError(f"n_batches must be >= 1: {n_batches}")
@@ -545,15 +535,12 @@ def export_vector_store_indexed(
         # materialize this drop's losers BEFORE appending its cells to
         # the dedup index (the lazily-planned probe must never observe
         # files appended after it — the text capstone's checkpoint rule)
-        t0 = _time.perf_counter()
         losers = (
             pairs.filter(F.col("neighbor_id") < F.col("query_id"))
             .select(F.col("query_id").alias("vec_id"))
             .distinct()
             .localCheckpoint()
         )
-        _stage(f"batch{i}_probe", t0)
-        t0 = _time.perf_counter()
         # BEGIN only now: everything above is read-only, so a crash in
         # the probe leaves no marker; the manifest snapshot bounds the
         # torn window to the two appends below
@@ -561,24 +548,16 @@ def export_vector_store_indexed(
         # the two appends target DIFFERENT directories and read only
         # pinned checkpoints — overlap them (guide §2.6; r12 round;
         # BEGIN/DONE brackets both, repair semantics unchanged)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_idx = pool.submit(
-                lambda i=i: batch_index.write.mode(
-                    "overwrite" if i == 0 else "append"
-                ).partitionBy("cid").parquet(index_dir)
-            )
-            survivors = batch.join(losers, "vec_id", "left_anti")
+        mode = "overwrite" if i == 0 else "append"
+        survivors = batch.join(losers, "vec_id", "left_anti")
+        overlap(
+            spark,
             # the DEDUP index always stores full vectors (the probe
             # needs them); pq_models shapes only the serving artifact
-            _write_store(
-                survivors, centroids, pq_models, store_dir,
-                "overwrite" if i == 0 else "append",
-            )
-            f_idx.result()
+            lambda: _write_store(survivors, centroids, pq_models, store_dir, mode),
+            lambda: batch_index.write.mode(mode).partitionBy("cid").parquet(index_dir),
+        )
         _mark_epoch(spark, marker_dir, i)
-        _stage(f"batch{i}_append", t0)
     return _vector_manifest(spark, out_dir)
 
 

@@ -3,7 +3,7 @@
 The IVF family keeps its model FROZEN between retrains
 (operators/ivf.py), so an operator needs a cheap, measurable answer
 to "when do I retrain?". The sf10 drift rehearsal
-(tools/rehearse_sf10_reindex.py, BENCH_SF10_REINDEX.json) measured
+(BENCH_SF10_REINDEX.json) measured
 the two signals that actually move under distribution drift — cell
 occupancy skew (1.57 → 3.75 under a frozen model at 3 drifted
 drops) and probe read amplification (per-query read fraction

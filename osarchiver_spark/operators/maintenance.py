@@ -49,7 +49,8 @@ def _swap_in(spark: SparkSession, path: str, write_to_tmp) -> None:
     """Crash-safe replace of ``path``: ``write_to_tmp(tmp)`` writes the
     new copy to a sibling temp dir, then a three-step rename swaps it
     in — at every instant at least one complete copy exists under a
-    predictable name (old aside -> tmp in -> old gone)."""
+    predictable name (old aside -> tmp in -> old gone). A missing
+    ``path`` is a first publish: tmp is renamed straight in."""
     fs, hpath, jvm = _fs_and_path(spark, path)
     tmp = path.rstrip("/") + "__compacting"
     tmp_path = jvm.org.apache.hadoop.fs.Path(tmp)
@@ -60,7 +61,8 @@ def _swap_in(spark: SparkSession, path: str, write_to_tmp) -> None:
     old_path = jvm.org.apache.hadoop.fs.Path(old)
     if fs.exists(old_path):
         fs.delete(old_path, True)
-    fs.rename(hpath, old_path)
+    if fs.exists(hpath):
+        fs.rename(hpath, old_path)
     fs.rename(tmp_path, hpath)
     fs.delete(old_path, True)
 

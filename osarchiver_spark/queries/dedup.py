@@ -94,23 +94,46 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REAPED_INDEX_DIRS: set[str] = set()
+_REAPED_SCRATCH_DIRS: set[str] = set()
 
 
-def _reap_index_dir_at_exit(idx_dir: str) -> None:
-    """Per-application index dirs would otherwise accumulate in /tmp
-    forever (each Spark app gets a fresh applicationId — the component
-    that makes concurrent runs collision-free also defeats the old
-    stable-path reuse). Register a process-exit rmtree once per dir:
-    within the app's lifetime repeated calls still reuse ONE
-    directory, and the host is clean after the process ends."""
-    if idx_dir in _REAPED_INDEX_DIRS:
-        return
+def _app_scratch_dir(spark: SparkSession, sf_dir: str, prefix: str, *parts: object) -> str:
+    """``<tmp>/<prefix><md5(sf_dir)[:12]>_<applicationId>[_<part>...]``,
+    removed at process exit together with its ``__``-suffixed siblings
+    (staging roots, epoch markers, stream checkpoints).
+
+    Stable per (fixture, Spark app): repeated runs in one app reuse ONE
+    directory instead of leaking a fresh mkdtemp each call, while the
+    applicationId keeps the path private to this app — two concurrent
+    runs over the same fixture can never overwrite a directory the
+    other's returned DataFrame still reads, nor collide with another
+    user's dir. The same component means every app leaves new dirs
+    behind, hence the exit reaper. Callers whose directories are
+    single-use add an invocation counter as a part."""
     import atexit
+    import glob
+    import hashlib
+    import os
     import shutil
+    import tempfile
 
-    _REAPED_INDEX_DIRS.add(idx_dir)
-    atexit.register(shutil.rmtree, idx_dir, ignore_errors=True)
+    name = prefix + "_".join(
+        [
+            hashlib.md5(sf_dir.encode()).hexdigest()[:12],
+            spark.sparkContext.applicationId,
+            *map(str, parts),
+        ]
+    )
+    path = os.path.join(tempfile.gettempdir(), name)
+    if path not in _REAPED_SCRATCH_DIRS:
+        _REAPED_SCRATCH_DIRS.add(path)
+
+        def reap() -> None:
+            for d in [path, *glob.glob(glob.escape(path) + "__*")]:
+                shutil.rmtree(d, ignore_errors=True)
+
+        atexit.register(reap)
+    return path
 
 
 def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,36 +145,17 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     write to a temp dir, read back, probe. Same semantics — and the
     same oracle — as dedup_incremental: at 100 TB this replaces the
     per-batch corpus re-sketch with an indexed lookup."""
-    import hashlib
-    import os
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
     from osarchiver_spark.operators.dedup import (
         minhash_lsh_incremental_indexed,
         minhash_lsh_index,
         prep_new_bands,
     )
+    from osarchiver_spark.session import overlap
 
     docs = load_table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 3)
     corpus = docs.filter(F.col("doc_id") % 10 != 3)
-    # stable per-(fixture, SparkSession) path + overwrite: repeated
-    # adjudication runs in one session reuse ONE directory instead of
-    # leaking a fresh mkdtemp each call, while the applicationId
-    # component makes the path private to this Spark app — two
-    # concurrent runs over the same fixture (e.g. a same-fixture A/B
-    # control) can no longer overwrite a directory the other's
-    # returned DataFrame still reads, and on multi-user hosts the
-    # name can't collide with another user's dir (r06 ADVICE item 1)
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "lsh_index_{}_{}".format(
-            hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-            spark.sparkContext.applicationId,
-        ),
-    )
-    _reap_index_dir_at_exit(idx_dir)
+    idx_dir = _app_scratch_dir(spark, sf_dir, "lsh_index_")
 
     # the index build (corpus side) and the probe-side prep (new-batch
     # shingle/sketch/band + key collect) share no inputs, so they run
@@ -161,16 +165,11 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, "doc_id", "text",
         shingle_n=3, num_hashes=NUM_HASHES, bands=BANDS, num_files=8,
     )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_idx = pool.submit(
-            lambda: built.write.mode("overwrite").parquet(idx_dir)
-        )
-        f_prep = pool.submit(
-            prep_new_bands, new, "doc_id", "text", 3, NUM_HASHES, BANDS
-        )
-        f_idx.result()
-        prepped = f_prep.result()
+    _, prepped = overlap(
+        spark,
+        lambda: built.write.mode("overwrite").parquet(idx_dir),
+        lambda: prep_new_bands(new, "doc_id", "text", 3, NUM_HASHES, BANDS),
+    )
     # read back with the builder's own (analysis-only) schema: no
     # footer re-inference job on the freshly written index (r11 round)
     index = spark.read.schema(built.schema).parquet(idx_dir)
@@ -287,10 +286,6 @@ IVF_NEARDUP_CLUSTERS = 8
 
 
 def q_dedup_ivf_neardup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
     from osarchiver_spark.operators.ivf import (
         ivf_index,
         ivf_neardup_probe,
@@ -301,14 +296,7 @@ def q_dedup_ivf_neardup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") < IVF_NEARDUP_VEC_CAP
     )
     cents = kmeans_fit(emb, "vec_id", "embedding", k=IVF_NEARDUP_CLUSTERS)
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "ivf_neardup_{}_{}".format(
-            hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-            spark.sparkContext.applicationId,
-        ),
-    )
-    _reap_index_dir_at_exit(idx_dir)
+    idx_dir = _app_scratch_dir(spark, sf_dir, "ivf_neardup_")
     ivf_index(emb, "vec_id", "embedding", cents).write.mode(
         "overwrite"
     ).partitionBy("cid").parquet(idx_dir)
@@ -339,10 +327,6 @@ def q_streaming_vector_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     batch one-shot build BY the capstone identity; multi-batch
     arrival (maxFilesPerTrigger) and epoch-replay idempotence are
     pinned in tests/test_streaming_vector_store.py."""
-    import hashlib
-    import os
-    import tempfile
-
     from osarchiver_spark.operators.ivf import kmeans_fit
     from osarchiver_spark.streaming.vector_store import (
         run_streaming_vector_maintenance,
@@ -361,17 +345,8 @@ def q_streaming_vector_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     # loop (r10 ADVICE item 4)
     global _SVM_INVOCATIONS
     _SVM_INVOCATIONS += 1
-    suffix = "{}_{}_{}".format(
-        hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-        spark.sparkContext.applicationId,
-        _SVM_INVOCATIONS,
-    )
-    index_dir = os.path.join(tempfile.gettempdir(), f"svm_idx_{suffix}")
-    store_dir = os.path.join(tempfile.gettempdir(), f"svm_store_{suffix}")
-    _reap_index_dir_at_exit(index_dir)
-    _reap_index_dir_at_exit(store_dir)
-    _reap_index_dir_at_exit(store_dir + "__epochs")
-    _reap_index_dir_at_exit(store_dir + "__checkpoint")
+    index_dir = _app_scratch_dir(spark, sf_dir, "svm_idx_", _SVM_INVOCATIONS)
+    store_dir = _app_scratch_dir(spark, sf_dir, "svm_store_", _SVM_INVOCATIONS)
     return run_streaming_vector_maintenance(
         spark, sf_dir, index_dir, store_dir, cents,
         threshold=EMBED_THRESHOLD, nprobe=SEMDEDUP_K,
@@ -402,29 +377,16 @@ def q_streaming_text_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph by the band-bucket symmetry identity — multi-batch arrival,
     epoch replay, and crash repair are pinned in
     tests/test_streaming_text_store.py + tests/test_crash_recovery.py."""
-    import hashlib
-    import os
-    import tempfile
-
     from osarchiver_spark.streaming.text_store import (
         run_streaming_text_maintenance,
     )
 
     global _STM_INVOCATIONS
     _STM_INVOCATIONS += 1
-    suffix = "{}_{}_{}".format(
-        hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-        spark.sparkContext.applicationId,
-        _STM_INVOCATIONS,
-    )
     dirs = {
-        kind: os.path.join(tempfile.gettempdir(), f"stm_{kind}_{suffix}")
+        kind: _app_scratch_dir(spark, sf_dir, f"stm_{kind}_", _STM_INVOCATIONS)
         for kind in ("idx", "corpus", "pairs")
     }
-    for d in dirs.values():
-        _reap_index_dir_at_exit(d)
-    _reap_index_dir_at_exit(dirs["pairs"] + "__epochs")
-    _reap_index_dir_at_exit(dirs["pairs"] + "__checkpoint")
     return run_streaming_text_maintenance(
         spark, sf_dir, dirs["idx"], dirs["corpus"], dirs["pairs"],
         threshold=MINHASH_THRESHOLD, hash_fn="md5",
@@ -446,10 +408,6 @@ def q_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers a production maintenance_decision() would act on —
     thresholds documented in operators/health.py, wired into the
     streaming maintenance loop via maintenance_policy."""
-    import hashlib
-    import os
-    import tempfile
-
     from osarchiver_spark.operators.health import index_health
     from osarchiver_spark.operators.ivf import ivf_index, kmeans_fit
 
@@ -458,14 +416,7 @@ def q_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "vec_id", "embedding",
         k=SEMDEDUP_K, iters=SEMDEDUP_ITERS, quantize=SEMDEDUP_QUANT,
     )
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "ih_store_{}_{}".format(
-            hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-            spark.sparkContext.applicationId,
-        ),
-    )
-    _reap_index_dir_at_exit(idx_dir)
+    idx_dir = _app_scratch_dir(spark, sf_dir, "ih_store_")
     ivf_index(emb, "vec_id", "embedding", cents).write.mode(
         "overwrite"
     ).partitionBy("cid").parquet(idx_dir)

@@ -105,22 +105,18 @@ def _staged_store_build(standing_index: DataFrame, drop_index: DataFrame, idx_di
     not the syscall, is what transfers."""
     import os
     import shutil
-    from concurrent.futures import ThreadPoolExecutor
 
-    from osarchiver_spark.queries.dedup import _reap_index_dir_at_exit
+    from osarchiver_spark.session import overlap
 
+    # a crash between the staged write and the publish below leaves the
+    # staging root behind; it is a ``__`` sibling of a scratch dir, so
+    # the exit reaper removes it (queries/dedup.py::_app_scratch_dir)
     stage_dir = idx_dir.rstrip("/") + "__stage"
-    # a crash between the staged write and the publish below must not
-    # leak the staging root past process exit
-    _reap_index_dir_at_exit(stage_dir)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_drop = pool.submit(
-            lambda: drop_index.write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(stage_dir)
-        )
-        standing_index.write.mode("overwrite").partitionBy("cid").parquet(idx_dir)
-        f_drop.result()
+    overlap(
+        standing_index.sparkSession,
+        lambda: standing_index.write.mode("overwrite").partitionBy("cid").parquet(idx_dir),
+        lambda: drop_index.write.mode("overwrite").partitionBy("cid").parquet(stage_dir),
+    )
     for entry in os.listdir(stage_dir):
         if not entry.startswith("cid="):
             continue  # root _SUCCESS/marker files stay behind
@@ -151,11 +147,6 @@ def build_and_probe_ivf(
     the query side) is independent of the fit, so it runs as a
     concurrent driver-thread job and is handed to the probe as
     ``batch_rows`` (guide §2.6; the guard math is unchanged)."""
-    import hashlib
-    import os
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
     from osarchiver_spark.operators.ivf import (
         INDEXED_PROBE_MAX_QUERIES,
         guard_batch,
@@ -164,45 +155,36 @@ def build_and_probe_ivf(
         kmeans_fit,
         prep_indexed_probe,
     )
-    from osarchiver_spark.queries.dedup import _reap_index_dir_at_exit
+    from osarchiver_spark.queries.dedup import _app_scratch_dir
+    from osarchiver_spark.session import overlap
 
     emb = load_table(spark, sf_dir, "embeddings")
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_n = pool.submit(
-            lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count()
-        )
-        centroids = kmeans_fit(emb, "vec_id", "embedding", k=n_clusters)
-        batch_rows = f_n.result()
+    centroids, batch_rows = overlap(
+        spark,
+        lambda: kmeans_fit(emb, "vec_id", "embedding", k=n_clusters),
+        lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count(),
+    )
     # enforce the batch contract BEFORE the probe frame is prepped in
     # a side thread: an oversized batch must fail fast, not after its
     # queries×nprobe frame was materialized into executor storage
     guard_batch(queries, INDEXED_PROBE_MAX_QUERIES, "ivf_topk_indexed", batch_rows)
 
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "{}{}_{}".format(
-            dir_prefix,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-            spark.sparkContext.applicationId,
-        ),
-    )
-    _reap_index_dir_at_exit(idx_dir)
+    idx_dir = _app_scratch_dir(spark, sf_dir, dir_prefix)
     standing = emb.filter(F.col("vec_id") % 10 != 3)
     drop = emb.filter(F.col("vec_id") % 10 == 3)
     # the query-side probe (model + queries only) shares no inputs
     # with the store writes — run it as a concurrent driver-thread
     # job that back-fills the writes' task tails (guide §2.6); the
     # standing write and the drop's staged write overlap too
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_probe = pool.submit(
-            prep_indexed_probe, queries, "vec_id", "embedding", centroids, nprobe
-        )
-        _staged_store_build(
+    _, prepped = overlap(
+        spark,
+        lambda: _staged_store_build(
             ivf_index(standing, "vec_id", "embedding", centroids),
             ivf_index(drop, "vec_id", "embedding", centroids),
             idx_dir,
-        )
-        prepped = f_probe.result()
+        ),
+        lambda: prep_indexed_probe(queries, "vec_id", "embedding", centroids, nprobe),
+    )
     index = spark.read.schema(IVF_STORE_SCHEMA).parquet(idx_dir)
     return ivf_topk_indexed(
         index, queries, "vec_id", "embedding", centroids, k=TOP_K, nprobe=nprobe,
@@ -284,11 +266,6 @@ def build_and_probe_ivf_pq(
     the probe reads nprobe/n_clusters of THAT). The probe's
     batch-contract count runs concurrently with the fit (guide §2.6)
     and is handed to the probe as ``batch_rows``."""
-    import hashlib
-    import os
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
     from osarchiver_spark.operators.ivf import INDEXED_PROBE_MAX_QUERIES
     from osarchiver_spark.operators.pq import (
         _unit_expr,
@@ -296,49 +273,40 @@ def build_and_probe_ivf_pq(
         ivf_pq_topk_indexed,
         pq_joint_fit,
     )
-    from osarchiver_spark.queries.dedup import _reap_index_dir_at_exit
+    from osarchiver_spark.queries.dedup import _app_scratch_dir
+    from osarchiver_spark.session import overlap
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb_n = emb.select(F.col("vec_id"), _unit_expr("embedding").alias("_uv"))
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_n = pool.submit(
-            lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count()
-        )
-        coarse, books = pq_joint_fit(
+    (coarse, books), batch_rows = overlap(
+        spark,
+        lambda: pq_joint_fit(
             emb_n, "vec_id", "_uv", n_clusters=n_clusters, m=m, codes=codes
-        )
-        batch_rows = f_n.result()
+        ),
+        lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count(),
+    )
     # fail oversized batches BEFORE the probe frame is prepped in a
     # side thread (the guard exists to precede that materialization)
     from osarchiver_spark.operators.ivf import guard_batch
 
     guard_batch(queries, INDEXED_PROBE_MAX_QUERIES, "ivf_pq_topk_indexed", batch_rows)
 
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "{}{}_{}".format(
-            dir_prefix,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-            spark.sparkContext.applicationId,
-        ),
-    )
-    _reap_index_dir_at_exit(idx_dir)
+    idx_dir = _app_scratch_dir(spark, sf_dir, dir_prefix)
     standing = emb.filter(F.col("vec_id") % 10 != 3)
     drop = emb.filter(F.col("vec_id") % 10 == 3)
     # probe leg (model + queries only) concurrent with the code-store
     # writes (guide §2.6); standing + staged drop writes overlap too
     from osarchiver_spark.operators.pq import prep_pq_indexed_probe
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_probe = pool.submit(
-            prep_pq_indexed_probe, queries, "vec_id", "embedding", coarse, nprobe
-        )
-        _staged_store_build(
+    _, prepped = overlap(
+        spark,
+        lambda: _staged_store_build(
             ivf_pq_index(standing, "vec_id", "embedding", coarse, books),
             ivf_pq_index(drop, "vec_id", "embedding", coarse, books),
             idx_dir,
-        )
-        prepped = f_probe.result()
+        ),
+        lambda: prep_pq_indexed_probe(queries, "vec_id", "embedding", coarse, nprobe),
+    )
     index = spark.read.schema(PQ_STORE_SCHEMA).parquet(idx_dir)
     return ivf_pq_topk_indexed(
         index, queries, emb, "vec_id", "embedding", coarse, books,
@@ -392,11 +360,6 @@ def build_and_migrate_ivf(
     so they run as concurrent driver-thread jobs (guide §2.6: actions
     are only sequential because the driver calls them sequentially) —
     each leg's own job chain, and therefore its math, is untouched."""
-    import hashlib
-    import os
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
     from osarchiver_spark.operators.ivf import (
         INDEXED_PROBE_MAX_QUERIES,
         ivf_index,
@@ -404,19 +367,12 @@ def build_and_migrate_ivf(
         ivf_topk_indexed,
         kmeans_fit,
     )
-    from osarchiver_spark.queries.dedup import _reap_index_dir_at_exit
+    from osarchiver_spark.queries.dedup import _app_scratch_dir
+    from osarchiver_spark.session import overlap
 
     emb = load_table(spark, sf_dir, "embeddings")
-
-    suffix = "{}{}_{}".format(
-        dir_prefix,
-        hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-        spark.sparkContext.applicationId,
-    )
-    old_dir = os.path.join(tempfile.gettempdir(), f"{suffix}_old")
-    new_dir = os.path.join(tempfile.gettempdir(), f"{suffix}_new")
-    _reap_index_dir_at_exit(old_dir)
-    _reap_index_dir_at_exit(new_dir)
+    old_dir = _app_scratch_dir(spark, sf_dir, dir_prefix, "old")
+    new_dir = _app_scratch_dir(spark, sf_dir, dir_prefix, "new")
 
     standing = emb.filter(F.col("vec_id") % 10 != 3)
     drop = emb.filter(F.col("vec_id") % 10 == 3)
@@ -431,15 +387,12 @@ def build_and_migrate_ivf(
             old_dir,
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_old = pool.submit(_old_store_leg)
-        f_new = pool.submit(kmeans_fit, emb, "vec_id", "embedding", 16)
-        f_n = pool.submit(
-            lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count()
-        )
-        f_old.result()
-        new_model = f_new.result()
-        batch_rows = f_n.result()
+    _, new_model, batch_rows = overlap(
+        spark,
+        _old_store_leg,
+        lambda: kmeans_fit(emb, "vec_id", "embedding", 16),
+        lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count(),
+    )
 
     from osarchiver_spark.operators.ivf import guard_batch, prep_indexed_probe
 
@@ -448,14 +401,13 @@ def build_and_migrate_ivf(
     old_store = spark.read.schema(IVF_STORE_SCHEMA).parquet(old_dir)
     # probe leg needs only the NEW model + queries: concurrent with
     # the reindex write (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_probe = pool.submit(
-            prep_indexed_probe, queries, "vec_id", "embedding", new_model, nprobe
-        )
-        ivf_reindex(old_store, new_model).write.mode("overwrite").partitionBy(
+    _, prepped = overlap(
+        spark,
+        lambda: ivf_reindex(old_store, new_model).write.mode("overwrite").partitionBy(
             "cid"
-        ).parquet(new_dir)
-        prepped = f_probe.result()
+        ).parquet(new_dir),
+        lambda: prep_indexed_probe(queries, "vec_id", "embedding", new_model, nprobe),
+    )
     migrated = spark.read.schema(IVF_STORE_SCHEMA).parquet(new_dir)
     return ivf_topk_indexed(
         migrated, queries, "vec_id", "embedding", new_model,
@@ -501,11 +453,6 @@ def build_and_migrate_ivf_pq(
     store) and the NEW-model fit are independent, so they run as
     concurrent driver-thread jobs (guide §2.6) — each leg's own job
     chain, and therefore its math, is untouched."""
-    import hashlib
-    import os
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
     from osarchiver_spark.operators.pq import (
         _unit_expr,
         ivf_pq_index,
@@ -514,20 +461,13 @@ def build_and_migrate_ivf_pq(
         pq_joint_fit,
     )
     from osarchiver_spark.operators.ivf import INDEXED_PROBE_MAX_QUERIES
-    from osarchiver_spark.queries.dedup import _reap_index_dir_at_exit
+    from osarchiver_spark.queries.dedup import _app_scratch_dir
+    from osarchiver_spark.session import overlap
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb_n = emb.select(F.col("vec_id"), _unit_expr("embedding").alias("_uv"))
-
-    suffix = "{}{}_{}".format(
-        dir_prefix,
-        hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-        spark.sparkContext.applicationId,
-    )
-    old_dir = os.path.join(tempfile.gettempdir(), f"{suffix}_old")
-    new_dir = os.path.join(tempfile.gettempdir(), f"{suffix}_new")
-    _reap_index_dir_at_exit(old_dir)
-    _reap_index_dir_at_exit(new_dir)
+    old_dir = _app_scratch_dir(spark, sf_dir, dir_prefix, "old")
+    new_dir = _app_scratch_dir(spark, sf_dir, dir_prefix, "new")
 
     standing = emb.filter(F.col("vec_id") % 10 != 3)
     drop = emb.filter(F.col("vec_id") % 10 == 3)
@@ -543,17 +483,12 @@ def build_and_migrate_ivf_pq(
             old_dir,
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_old = pool.submit(_old_store_leg)
-        f_new = pool.submit(
-            pq_joint_fit, emb_n, "vec_id", "_uv", 16, 3, 16, 16
-        )
-        f_n = pool.submit(
-            lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count()
-        )
-        f_old.result()
-        coarse_b, books_b = f_new.result()
-        batch_rows = f_n.result()
+    _, (coarse_b, books_b), batch_rows = overlap(
+        spark,
+        _old_store_leg,
+        lambda: pq_joint_fit(emb_n, "vec_id", "_uv", 16, 3, 16, 16),
+        lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count(),
+    )
 
     from osarchiver_spark.operators.ivf import guard_batch
     from osarchiver_spark.operators.pq import prep_pq_indexed_probe
@@ -563,14 +498,13 @@ def build_and_migrate_ivf_pq(
     old_store = spark.read.schema(PQ_STORE_SCHEMA).parquet(old_dir)
     # probe leg needs only the NEW model + queries: concurrent with
     # the re-encode/migrate write (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_probe = pool.submit(
-            prep_pq_indexed_probe, queries, "vec_id", "embedding", coarse_b, nprobe
-        )
-        ivf_pq_reindex(
+    _, prepped = overlap(
+        spark,
+        lambda: ivf_pq_reindex(
             old_store, emb, "vec_id", "embedding", coarse_b, books_b
-        ).write.mode("overwrite").partitionBy("cid").parquet(new_dir)
-        prepped = f_probe.result()
+        ).write.mode("overwrite").partitionBy("cid").parquet(new_dir),
+        lambda: prep_pq_indexed_probe(queries, "vec_id", "embedding", coarse_b, nprobe),
+    )
     migrated = spark.read.schema(PQ_STORE_SCHEMA).parquet(new_dir)
     return ivf_pq_topk_indexed(
         migrated, queries, emb, "vec_id", "embedding", coarse_b, books_b,

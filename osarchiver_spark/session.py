@@ -10,8 +10,11 @@ doesn't over-parallelize tiny SFs.
 from __future__ import annotations
 
 import os
+import threading
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 def get_spark(app_name: str = "osarchiver_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -50,3 +53,38 @@ def get_spark(app_name: str = "osarchiver_spark", shuffle_partitions: int | None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def overlap(spark: SparkSession, *fns: Callable[[], Any]) -> list[Any]:
+    """Run independent Spark job chains concurrently from the driver.
+
+    ``fns[0]`` runs on the calling thread; every other callable runs on
+    its own worker thread that inherits the caller's local properties
+    (job group, description, scheduler pool, streaming query ids) and
+    session tags, so the jobs it launches stay attributable to — and
+    cancellable with — the caller's. Waits for every callable, then
+    re-raises the first failure in argument order, or returns the
+    results in argument order."""
+    results: list[Any] = [None] * len(fns)
+    errors: list[BaseException | None] = [None] * len(fns)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = fns[i]()
+        except BaseException as exc:  # noqa: BLE001 - re-raised by the caller
+            errors[i] = exc
+
+    # wrap on the calling thread: the properties are captured here
+    workers = [
+        threading.Thread(target=inheritable_thread_target(spark)(run), args=(i,))
+        for i in range(1, len(fns))
+    ]
+    for w in workers:
+        w.start()
+    run(0)
+    for w in workers:
+        w.join()
+    for exc in errors:
+        if exc is not None:
+            raise exc
+    return results

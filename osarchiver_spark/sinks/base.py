@@ -182,8 +182,10 @@ class ParquetArchiveSink(Sink):
                 check_schema_drift(df.schema, incoming.schema)
             # Idempotent insert-if-absent: drop rows whose pk is
             # already archived (anti-join replaces the reference's
-            # ON DUPLICATE KEY UPDATE no-op upsert).
-            df = df.join(existing.select(*pk), on=pk, how="left_anti")
+            # ON DUPLICATE KEY UPDATE no-op upsert). A join on
+            # column names moves the keys first: restore the source
+            # order so appended files match the earlier ones.
+            df = df.join(existing.select(*pk), on=pk, how="left_anti").select(*df.columns)
             mode = "append"
         if self.partition_column and self.partition_column in df.columns:
             # Month-partitioned archive layout: partition pruning on

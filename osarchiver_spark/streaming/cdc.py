@@ -9,9 +9,9 @@ replaces the stored row only when its sequence is newer, and a
 winning delete removes the key. Out-of-order delivery ACROSS batches
 is therefore safe, not just within a batch.
 
-State is a parquet directory rewritten atomically per batch
-(temp + swap, same crash-safety pattern as
-operators/maintenance.py::compact_parquet_dir). On Delta/Iceberg the
+State is a parquet directory rewritten per batch through
+operators/maintenance.py::_swap_in (the compaction swap): a crash at
+any point leaves a complete old or new state. On Delta/Iceberg the
 reconcile collapses into a single MERGE statement; the plan shape —
 hash agg + keyed outer reconcile, never a window over history — is
 what survives a 100 TB state table.
@@ -19,12 +19,18 @@ what survives a 100 TB state table.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osarchiver_spark.operators.maintenance import _fs_and_path, _swap_in
 from osarchiver_spark.operators.merge import cdc_apply
+from osarchiver_spark.sinks.base import _hadoop_path_exists
+
+
+class CdcStateMissingError(RuntimeError):
+    """The checkpoint records committed batches but the state
+    directory is gone: resuming would rebuild the state from only the
+    batches after the checkpoint and silently lose every earlier key."""
 
 
 def reconcile_cdc_state(
@@ -96,9 +102,20 @@ def run_streaming_cdc_upsert(
     offsets instead of re-reading every file (re-application would be
     a seq-guarded no-op for state, but a full changelog re-read is
     exactly the cost a restart must not pay). Pinned in
-    tests/test_cdc.py::test_resume_after_kill_processes_only_new_files."""
+    tests/test_cdc.py::test_resume_after_kill_processes_only_new_files.
+
+    Raises :class:`CdcStateMissingError` when the checkpoint has
+    committed batches but ``target_dir`` does not exist."""
     if checkpoint_dir is None:
         checkpoint_dir = f"{target_dir.rstrip('/')}__ckpt"
+    if _has_committed_batches(spark, checkpoint_dir) and not _hadoop_path_exists(
+        spark, target_dir
+    ):
+        raise CdcStateMissingError(
+            f"checkpoint {checkpoint_dir} has committed batches but the state "
+            f"{target_dir} is missing; restore the state, or remove the "
+            f"checkpoint to rebuild from the whole changelog"
+        )
     reader = (
         spark.readStream.format("parquet")
         .schema(schema)
@@ -110,10 +127,6 @@ def run_streaming_cdc_upsert(
     stream = reader.load(watch_dir)
 
     def apply_batch(batch_df: DataFrame, _epoch_id: int) -> None:
-        import shutil
-
-        from osarchiver_spark.sinks.base import _hadoop_path_exists
-
         sp = batch_df.sparkSession
         state = (
             sp.read.parquet(target_dir)
@@ -121,12 +134,9 @@ def run_streaming_cdc_upsert(
             else None
         )
         new_state = reconcile_cdc_state(state, batch_df, key_col, seq_col)
-        # state feeds its own rewrite: materialize to a temp dir first,
-        # then republish (the compact_parquet_dir swap pattern)
-        tmp = f"{target_dir}__tmp_{uuid.uuid4().hex[:8]}"
-        new_state.write.mode("overwrite").parquet(tmp)
-        sp.read.parquet(tmp).write.mode("overwrite").parquet(target_dir)
-        shutil.rmtree(tmp, ignore_errors=True)
+        # the state feeds its own rewrite: write the new copy beside it,
+        # then rename it in
+        _swap_in(sp, target_dir, lambda tmp: new_state.write.mode("overwrite").parquet(tmp))
 
     q = (
         stream.writeStream.outputMode("append")
@@ -142,4 +152,11 @@ def run_streaming_cdc_upsert(
     # filter them out
     return spark.read.parquet(target_dir).filter(~F.col("is_deleted")).drop(
         "is_deleted"
+    )
+
+
+def _has_committed_batches(spark: SparkSession, checkpoint_dir: str) -> bool:
+    fs, commits, _ = _fs_and_path(spark, f"{checkpoint_dir.rstrip('/')}/commits")
+    return fs.exists(commits) and any(
+        st.getPath().getName().isdigit() for st in fs.listStatus(commits)
     )

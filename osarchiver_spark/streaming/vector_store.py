@@ -244,6 +244,7 @@ def make_maintenance_batch_fn(
         ivf_neardup_probe,
         prep_indexed_probe,
     )
+    from osarchiver_spark.session import overlap
 
     marker_dir = f"{store_dir.rstrip('/')}__epochs"
 
@@ -296,17 +297,14 @@ def make_maintenance_batch_fn(
         # concurrent driver-thread jobs (guide §2.6; r12 round) — the
         # BEGIN/DONE manifest brackets both regardless of order, so
         # torn-epoch repair semantics are unchanged
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_idx = pool.submit(
-                lambda: batch_index.write.mode(
-                    "overwrite" if first else "append"
-                ).partitionBy("cid").parquet(index_dir)
-            )
-            survivors = batch.join(losers, "vec_id", "left_anti")
-            _write_store(survivors, centroids, pq_models, store_dir, store_mode)
-            f_idx.result()
+        survivors = batch.join(losers, "vec_id", "left_anti")
+        overlap(
+            spark,
+            lambda: _write_store(survivors, centroids, pq_models, store_dir, store_mode),
+            lambda: batch_index.write.mode(
+                "overwrite" if first else "append"
+            ).partitionBy("cid").parquet(index_dir),
+        )
         _mark_epoch(spark, marker_dir, epoch_id)
 
     return process_batch
@@ -324,7 +322,6 @@ def run_streaming_vector_maintenance(
     pq_models: tuple[list[list[float]], list[list[list[float]]]] | None = None,
     auto_repair: bool = False,
     maintenance_policy: dict | None = None,
-    on_epoch=None,
 ) -> DataFrame:
     """Stream the embeddings fixture through the maintenance loop and
     return the resulting store's manifest (cid, n_vectors).
@@ -369,16 +366,6 @@ def run_streaming_vector_maintenance(
     process_batch = make_maintenance_batch_fn(
         spark, index_dir, store_dir, centroids, threshold, nprobe, pq_models
     )
-    if on_epoch is not None:  # rehearsal instrumentation: per-epoch wall
-        import time as _time
-
-        inner = process_batch
-
-        def process_batch(batch_df, epoch_id):  # noqa: F811
-            t0 = _time.perf_counter()
-            inner(batch_df, epoch_id)
-            on_epoch(epoch_id, round(_time.perf_counter() - t0, 3))
-
     q = (
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", f"{store_dir.rstrip('/')}__checkpoint")

@@ -97,3 +97,72 @@ def test_resume_after_kill_processes_only_new_files(spark, tmp_path):
     new_batches = batches_final - batches_first
     # exactly ONE new micro-batch: the new file, not a re-read of a+b
     assert len(new_batches) == 1, (batches_first, batches_final)
+
+
+def _write_changelog(spark, watch):
+    """ROWS as three one-file micro-batches: seq 1-3, 7, 4-6."""
+    watch.mkdir()
+    log = spark.createDataFrame(ROWS, CHANGELOG_SCHEMA)
+    for name, lo, hi in (("a", 1, 3), ("b", 7, 7), ("c", 4, 6)):
+        log.filter((F.col("seq") >= lo) & (F.col("seq") <= hi)).coalesce(
+            1
+        ).write.parquet(str(watch / f"{name}.parquet"))
+
+
+def test_failed_publish_keeps_previous_state_and_rerun_converges(
+    spark, tmp_path, monkeypatch
+):
+    """Batch 2 crashes after writing its new state but before the
+    swap: batch 1's state must still be complete at the target, and
+    a re-run of the same pipeline must converge to the one-shot
+    apply."""
+    import pytest
+
+    from osarchiver_spark.streaming import cdc
+
+    _write_changelog(spark, tmp_path / "log")
+    state = str(tmp_path / "state")
+    real_swap_in = cdc._swap_in
+    publishes = []
+
+    def crash_on_second_publish(sp, path, write_to_tmp):
+        publishes.append(path)
+        if len(publishes) != 2:
+            return real_swap_in(sp, path, write_to_tmp)
+
+        def write_then_crash(tmp):
+            write_to_tmp(tmp)
+            raise RuntimeError("injected crash before the swap")
+
+        return real_swap_in(sp, path, write_then_crash)
+
+    monkeypatch.setattr(cdc, "_swap_in", crash_on_second_publish)
+    with pytest.raises(Exception, match="injected crash"):
+        run_streaming_cdc_upsert(spark, str(tmp_path / "log"), CHANGELOG_SCHEMA, "k", "seq", state)
+    after_batch1 = {
+        (r.k, r.v, r.last_seq, r.is_deleted) for r in spark.read.parquet(state).collect()
+    }
+    assert after_batch1 == {(1, "a", 1, False), (2, "x", 2, False), (4, "z", 3, False)}
+
+    monkeypatch.setattr(cdc, "_swap_in", real_swap_in)
+    final = run_streaming_cdc_upsert(
+        spark, str(tmp_path / "log"), CHANGELOG_SCHEMA, "k", "seq", state
+    )
+    assert {(r.k, r.v, r.last_seq) for r in final.collect()} == EXPECT
+
+
+def test_missing_state_with_checkpoint_is_refused(spark, tmp_path):
+    """A checkpoint with committed batches and no state would resume
+    from an empty state and drop every earlier key: refuse it."""
+    import shutil
+
+    import pytest
+
+    from osarchiver_spark.streaming.cdc import CdcStateMissingError
+
+    _write_changelog(spark, tmp_path / "log")
+    state = str(tmp_path / "state")
+    run_streaming_cdc_upsert(spark, str(tmp_path / "log"), CHANGELOG_SCHEMA, "k", "seq", state)
+    shutil.rmtree(state)
+    with pytest.raises(CdcStateMissingError):
+        run_streaming_cdc_upsert(spark, str(tmp_path / "log"), CHANGELOG_SCHEMA, "k", "seq", state)

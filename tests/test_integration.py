@@ -3,8 +3,11 @@ multi-sink fan-out, source rewrite, and re-run idempotency together."""
 
 from __future__ import annotations
 
+import glob
+from dataclasses import replace
 from datetime import datetime
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from osarchiver_spark.operators.archive import Archiver
@@ -14,6 +17,7 @@ from osarchiver_spark.sources.parquet import load_table
 
 NOW = datetime(2001, 12, 1)
 CUTOFF = datetime(1998, 12, 1)
+LATER = datetime(2002, 12, 1)  # cutoff 1999-12-01: a year of new rows
 
 
 def test_multi_table_run(spark, sf_medium, tmp_path):
@@ -67,3 +71,18 @@ def test_multi_table_run(spark, sf_medium, tmp_path):
     for t, pk in pks.items():
         archived = spark.read.parquet(str(tmp_path / "arch" / t))
         assert archived.groupBy(*pk).count().filter("count > 1").count() == 0
+
+    # a later run appends rows through the pk anti-join: every archive
+    # file, first write and appends alike, keeps the source's column
+    # order (a join on column names would move the key columns first)
+    before = {t: archived_files(tmp_path / "arch" / t) for t in pks}
+    Archiver(replace(spec, now=LATER), arch.sinks[:1]).run(tables)
+    for t in pks:
+        files = archived_files(tmp_path / "arch" / t)
+        assert len(files) > len(before[t]), f"{t}: the later run appended nothing"
+        for f in files:
+            assert pq.read_schema(f).names == tables[t].columns, f
+
+
+def archived_files(table_dir) -> list[str]:
+    return sorted(glob.glob(str(table_dir / "*.parquet")))

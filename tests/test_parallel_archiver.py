@@ -1,13 +1,18 @@
 """Generation-parallel archiver: same results as sequential, FK
-ordering preserved between generations."""
+ordering preserved between generations; the driver-thread overlap
+helper it runs on."""
 
 from __future__ import annotations
 
+import time
 from datetime import datetime
+
+import pytest
 
 from osarchiver_spark.operators.archive import Archiver
 from osarchiver_spark.plans.jobspec import ArchiveJobSpec, TableSpec
 from osarchiver_spark.plans.toposort import table_generations
+from osarchiver_spark.session import overlap
 from osarchiver_spark.sources.parquet import load_table
 
 
@@ -51,3 +56,49 @@ def test_parallel_run_matches_sequential(spark, sf_small):
     r_par = {r.table: (r.archived_rows, r.remaining_rows) for r in par.run(tables)}
     assert r_seq == r_par
     assert set(r_seq) == {"orders", "lineitem", "events"}
+
+
+def test_overlap_jobs_inherit_the_callers_group_description_and_tags(spark):
+    """Jobs launched by every callable, on the calling thread or a
+    worker, land in the caller's job group; workers also see the
+    caller's description and session tags. Results come back in
+    argument order."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    untagged_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("overlap-test", "overlap-test: caller")
+    spark.addTag("overlap-test-tag")
+    try:
+        seen = overlap(
+            spark,
+            *(
+                lambda n=n: (
+                    spark.range(n).count(),
+                    sc.getLocalProperty("spark.job.description"),
+                    "overlap-test-tag" in spark.getTags(),
+                )
+                for n in (1, 2, 3)
+            ),
+        )
+    finally:
+        spark.removeTag("overlap-test-tag")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == [(n, "overlap-test: caller", True) for n in (1, 2, 3)]
+    assert len(tracker.getJobIdsForGroup("overlap-test")) >= 3
+    assert set(tracker.getJobIdsForGroup(None)) == untagged_before
+
+
+def test_overlap_reraises_a_side_failure_after_all_callables_finish(spark):
+    finished = []
+
+    def slow(name: str, seconds: float):
+        time.sleep(seconds)
+        finished.append(name)
+
+    def boom():
+        raise ValueError("side callable failed")
+
+    with pytest.raises(ValueError, match="side callable failed"):
+        overlap(spark, lambda: slow("caller", 0.3), boom, lambda: slow("side", 0.6))
+    assert sorted(finished) == ["caller", "side"]

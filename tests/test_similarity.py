@@ -539,3 +539,34 @@ def test_staged_store_build_equals_sequential_append(spark, tmp_path):
     )
     want = sorted((i, (float(i), 0.0), i % 3) for i in range(30))
     assert got == want
+
+
+def test_app_scratch_dir_is_private_and_reaped_with_its_siblings(spark, monkeypatch):
+    """Scratch dirs are named per (fixture, Spark app, parts); the exit
+    reaper, registered once per dir, also removes its ``__`` siblings
+    (staging roots, epoch markers, stream checkpoints)."""
+    import atexit
+    import os
+    import shutil
+
+    from osarchiver_spark.queries.dedup import _app_scratch_dir
+
+    reapers = []
+    monkeypatch.setattr(atexit, "register", reapers.append)
+    path = _app_scratch_dir(spark, "/fixture/reap-test", "reap_test_", 7)
+    assert _app_scratch_dir(spark, "/fixture/reap-test", "reap_test_", 7) == path
+    assert len(reapers) == 1
+    name = os.path.basename(path)
+    assert name.startswith("reap_test_")
+    assert name.endswith(f"_{spark.sparkContext.applicationId}_7")
+    siblings = [path + "__stage", path + "__checkpoint"]
+    keep = path + "_other"  # shares the prefix, is not a sibling
+    try:
+        for d in (path, *siblings, keep):
+            os.makedirs(os.path.join(d, "part"), exist_ok=True)
+        reapers[0]()
+        assert not any(os.path.exists(d) for d in (path, *siblings))
+        assert os.path.exists(keep)
+    finally:
+        for d in (path, *siblings, keep):
+            shutil.rmtree(d, ignore_errors=True)
